@@ -1,8 +1,9 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
@@ -41,6 +42,12 @@ object ErrorPolicy {
   * repartition-by-shard + sort-within-partition; batch-granularity
   * checkpointing (kinesis.go:198-201) is the per-batch saver write of
   * each shard's max sequence.
+  *
+  * Each micro-batch is one pass: the task that runs the handler over a
+  * shard's sorted records also emits the shard's last (= max) sequence,
+  * written to the saver once the action succeeds. One action reads the
+  * batch from the source once, so nothing is cached, and a batch that
+  * failed under `Fail` writes no checkpoint.
   *
   * Run it on any streaming DataFrame with the [[KinesisRecord.schema]]
   * envelope — the DSv2 source (graft.sources), a file-replay stream,
@@ -129,51 +136,40 @@ class GraftConsumer(val option: GraftOption) {
     val streamName = option.streamName
 
     import spark.implicits._
-    val runBatch: DataFrame => Unit = { batch =>
-      val ds: Dataset[KinesisRecord] = batch
-        .select(KinesisRecord.schema.fieldNames.map(col).toSeq: _*)
-        .as[KinesisRecord]
-      // Per-shard order: hash all of a shard's records into one
-      // partition, sort by sequence inside it (kinesis.go:173-212
-      // guarantees the same via one goroutine per shard).
-      ds.repartition(col("shardId"))
-        .sortWithinPartitions(col("shardId"), length(col("sequenceNumber")), col("sequenceNumber"))
-        .foreachPartition { (it: Iterator[KinesisRecord]) =>
-          it.foreach { rec =>
-            try h(rec)
-            catch {
-              case e: Throwable => pol match {
-                case ErrorPolicy.SkipAndLog => // kinesis.go:194-197
-                  acc.add(1)
-                  onErr.foreach(f => try f(rec, e) catch { case _: Throwable => () })
-                case ErrorPolicy.Fail => throw e
-              }
-            }
-          }
-        }
-      // Batch-granularity checkpoint (kinesis.go:198-201): one write
-      // per shard with the batch's last sequence. (length, value)
-      // ordering = numeric order for digit-string sequences.
-      saver.foreach { sv =>
-        batch.groupBy("streamName", "shardId")
-          .agg(max(struct(length(col("sequenceNumber")).as("l"),
-            col("sequenceNumber").as("s"))).as("m"))
-          .select(col("streamName"), col("shardId"), col("m.s").as("seq"))
-          .collect()
-          .foreach(r => sv.set(r.getString(0), r.getString(1), r.getString(2)))
-      }
-    }
     val writer = stream.writeStream
       .queryName(s"graft-consumer-$streamName")
       .trigger(if (availNow) Trigger.AvailableNow() else Trigger.ProcessingTime(sleep.toMillis))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Two actions follow (handler pass + checkpoint aggregation):
-        // persist so the micro-batch is fetched from the source once,
-        // not re-planned per action (a real service would otherwise
-        // see double the GetRecords traffic).
-        batch.persist()
-        try runBatch(batch)
-        finally batch.unpersist()
+        // Per-shard order: hash all of a shard's records into one
+        // partition, sort by sequence inside it (kinesis.go:173-212
+        // guarantees the same via one goroutine per shard). (length,
+        // value) ordering = numeric order for digit-string sequences, so
+        // the last sequence seen per shard, handled or skipped, is its max.
+        val last = batch
+          .select(KinesisRecord.schema.fieldNames.map(col).toSeq: _*)
+          .as[KinesisRecord]
+          .repartition(col("shardId"))
+          .sortWithinPartitions(col("shardId"), length(col("sequenceNumber")), col("sequenceNumber"))
+          .mapPartitions { (it: Iterator[KinesisRecord]) =>
+            val seen = mutable.HashMap.empty[(String, String), String]
+            it.foreach { rec =>
+              try h(rec)
+              catch {
+                case e: Throwable => pol match {
+                  case ErrorPolicy.SkipAndLog => // kinesis.go:194-197
+                    acc.add(1)
+                    onErr.foreach(f => try f(rec, e) catch { case _: Throwable => () })
+                  case ErrorPolicy.Fail => throw e
+                }
+              }
+              seen((rec.streamName, rec.shardId)) = rec.sequenceNumber
+            }
+            seen.iterator.map { case ((st, sh), seq) => (st, sh, seq) }
+          }
+          .collect()
+        // Batch-granularity checkpoint (kinesis.go:198-201): one write
+        // per shard, only after every partition's handler pass succeeded.
+        saver.foreach(sv => last.foreach { case (st, sh, seq) => sv.set(st, sh, seq) })
       }
     checkpointLoc.foreach(writer.option("checkpointLocation", _))
     val q = writer.start()

@@ -1,11 +1,13 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSuite
 
@@ -114,17 +116,96 @@ class GraftConsumerSpec extends SparkSuite {
   test("fail error policy stops the query (Spark-native default)") {
     import spark.implicits._
     val mem = MemoryStream[KinesisRecord](spark)
+    val saver = new InMemorySequenceSaver
     val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
       .sleepLimit(100.millis)
+      .setSaver(saver)
       .errorPolicy(ErrorPolicy.Fail)
-      .handle(_ => sys.error("always boom"))
+      .handle(r => if (new String(r.data, "UTF-8") == "payload-9") sys.error("always boom"))
     val q = consumer.run(mem.toDF())
-    mem.addData(rec("shard-0", 1))
+    mem.addData(rec("shard-0", 1), rec("shard-0", 2), rec("shard-1", 1))
+    q.processAllAvailable()
+    val firstBatch = saver.snapshot
+    assert(firstBatch == Map(("test-stream", "shard-0") -> f"${2}%09d",
+      ("test-stream", "shard-1") -> f"${1}%09d"))
+
+    mem.addData(rec("shard-0", 3), rec("shard-0", 9), rec("shard-1", 5))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
     }
     assert(e.getMessage.contains("boom") || e.cause != null)
+    // No checkpoint for a batch whose handler threw, not even for the
+    // shard whose records all succeeded.
+    assert(saver.snapshot == firstBatch)
     consumer.shutdown(30.seconds)
+  }
+
+  test("shards sharing a partition keep per-shard order and each shard's max checkpoint") {
+    import spark.implicits._
+    HandlerSink.clear()
+    val shards = (0 until 9).map(i => s"shard-$i") // > 4 shuffle partitions
+    // Unpadded sequences of growing length: numeric order differs from
+    // string order (e.g. "9" < "10").
+    val perShard = shards.zipWithIndex.map { case (sh, i) => sh -> (1 to 4).map(k => k * 7 + i * 3) }.toMap
+    val failing = ("shard-4", perShard("shard-4").max.toString) // last record of shard-4
+    val recs = perShard.toSeq.flatMap { case (sh, ns) =>
+      ns.map(n => rec(sh, n).copy(sequenceNumber = n.toString)).reverse
+    }
+    val interleaved = new scala.util.Random(7).shuffle(recs)
+
+    val mem = MemoryStream[KinesisRecord](spark)
+    val saver = new InMemorySequenceSaver
+    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+      .sleepLimit(100.millis)
+      .setSaver(saver)
+      .errorPolicy(ErrorPolicy.SkipAndLog)
+      .handle { r =>
+        HandlerSink.seen.add((r.shardId, r.sequenceNumber))
+        if ((r.shardId, r.sequenceNumber) == failing) sys.error("boom")
+      }
+    val q = consumer.run(mem.toDF())
+    try {
+      mem.addData(interleaved: _*)
+      q.processAllAvailable()
+      assert(consumer.errorCount == 1)
+      val byShard = HandlerSink.seen.asScala.toList.groupBy(_._1).map { case (sh, xs) => sh -> xs.map(_._2) }
+      assert(byShard == perShard.map { case (sh, ns) => sh -> ns.sorted.map(_.toString).toList })
+      assert(saver.snapshot == perShard.map { case (sh, ns) => ("test-stream", sh) -> ns.max.toString })
+    } finally assert(consumer.shutdown(30.seconds))
+  }
+
+  test("a non-empty consumer micro-batch runs at most 2 Spark jobs") {
+    import spark.implicits._
+    val mem = MemoryStream[KinesisRecord](spark)
+    val consumer = GraftConsumer(GraftOption().withStreamName("test-stream"))
+      .sleepLimit(100.millis)
+      .setSaver(new InMemorySequenceSaver)
+      .handle(_ => ())
+    val q = consumer.run(mem.toDF())
+    val queryId = q.id.toString
+    val jobs = new AtomicInteger(0)
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = Option(js.properties).foreach { p =>
+        if (p.getProperty("sql.streaming.queryId") == queryId) jobs.incrementAndGet()
+        if (p.getProperty("graft.test.fence") != null) fenced.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      try {
+        mem.addData((1 to 20).map(n => rec(s"shard-${n % 6}", n)): _*)
+        q.processAllAvailable()
+        assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+      } finally assert(consumer.shutdown(30.seconds))
+      // Listener events arrive in order: once a job started after the
+      // batch is seen, every job of the batch has been counted.
+      spark.sparkContext.setLocalProperty("graft.test.fence", "1")
+      try spark.range(1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.fence", null)
+      assert(fenced.await(30, TimeUnit.SECONDS))
+      assert(jobs.get() >= 1 && jobs.get() <= 2, s"${jobs.get()} jobs in one batch")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("start() wires the consumer's own source end-to-end (NewIteratorWithOpt → Handle → Run)") {

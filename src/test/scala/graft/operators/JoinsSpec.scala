@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSuite, Tables}
@@ -321,11 +325,10 @@ class JoinsSpec extends SparkSuite {
 
   test("cached q53 Bloom filter self-invalidates on re-ingest (no stale false-negatives)") {
     import spark.implicits._
-    // Unlike the perf-only caches (hotKeyCache/graphCache), a stale
-    // bloom CORRUPTS output: new custkeys would false-negative and be
-    // silently dropped before the exact semi-join. The cache is keyed
-    // on an ingest fingerprint (file names + lengths + mtimes), so an
-    // overwritten customer.parquet must rebuild WITHOUT releaseStats.
+    // A stale bloom would false-negative new custkeys and silently drop
+    // them before the exact semi-join. Artifacts are checked against a
+    // fingerprint of the dataset's files (paths + lengths + mtimes), so
+    // an overwritten customer.parquet must rebuild with no release call.
     val dir = java.nio.file.Files.createTempDirectory("bloom-reingest").toString
     def writeCustomers(keys: Seq[Long]): Unit =
       keys.toDF("c_custkey")
@@ -349,6 +352,73 @@ class JoinsSpec extends SparkSuite {
     assert(newKeys.toDF("k")
       .filter(!Joins.bloomMightContain(bf2, col("k"))).count() == 0,
       "a key from the re-ingested customer table false-negatived")
+  }
+
+  /** A fresh temp dir holding copies of `from`'s table files. */
+  private def copyOf(from: String): String = {
+    val dir = Files.createTempDirectory("graft-artifacts")
+    overwrite(dir.toString, from)
+    dir.toString
+  }
+
+  /** Persisted tables: connectedComponents' local checkpoint blocks
+    * are left out, since they are freed only when the garbage collector
+    * drops their frames, at a time no test controls.
+    */
+  private def persistedTables =
+    spark.sparkContext.getPersistentRDDs.filter(!_._2.isCheckpointed).keySet.toSet
+
+  private def overwrite(dir: String, from: String): Unit =
+    Files.list(Paths.get(from)).forEach { f =>
+      Files.copy(f, Paths.get(dir).resolve(f.getFileName), StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  test("artifact-reading queries answer from the re-ingested files with no release call") {
+    // q70/q76 return rows of the co-occurrence graph artifact, d06 the
+    // text pair labels, s07c the sized embedding pair labels: each
+    // answer IS an ingest artifact, so serving a stale one after a
+    // re-ingest would silently return the old dataset's rows
+    val names = Seq("q70_triangles", "q76_link_jaccard", "d06_dedup_clusters",
+      "s07c_semantic_survivors_sized")
+    def run(dir: String) = names.map(graft.SparkEntry.queries(_)(spark, dir).collect().toSeq)
+    def persisted = persistedTables.size
+    val dir = copyOf(sf("sf0.001"))
+    val old = run(dir)
+    val warm = persisted
+    overwrite(dir, sf("sf0.01"))
+    val rebuilt = run(dir)
+    assert(persisted <= warm, "the re-ingested dir's stale artifacts stayed persisted")
+    val fresh = run(copyOf(sf("sf0.01")))
+    val blind = names.indices.filter(i => old(i) == fresh(i)).map(names)
+    assert(blind.isEmpty, "these queries cannot tell the two datasets apart")
+    val stale = names.indices.filter(i => rebuilt(i) != fresh(i)).map(names)
+    assert(stale.isEmpty, "these queries served the old dataset's rows")
+  }
+
+  test("concurrent first calls build each nested artifact once") {
+    // d06's first access builds labels -> pairs -> shingles, each under
+    // its own entry lock; two racing callers must neither deadlock nor
+    // build (and persist) any artifact twice
+    val d06 = graft.SparkEntry.queries("d06_dedup_clusters")
+    val before1 = persistedTables
+    val single = d06(spark, copyOf(sf("sf0.001"))).collect().toSeq
+    val builtOnce = (persistedTables -- before1).size
+    val dir = copyOf(sf("sf0.001"))
+    val before2 = persistedTables
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map(_ => pool.submit(new Callable[Seq[Row]] {
+        def call() = { start.await(); d06(spark, dir).collect().toSeq }
+      }))
+      start.countDown()
+      val results = calls.map(_.get(5, TimeUnit.MINUTES))
+      assert(results(0) == results(1))
+      assert(results(0) == single)
+    } finally pool.shutdown()
+    assert(builtOnce > 0)
+    assert((persistedTables -- before2).size == builtOnce,
+      "an artifact was built (and persisted) more than once")
   }
 
   test("buildBloom rejects invalid parameters") {

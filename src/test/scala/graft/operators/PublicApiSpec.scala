@@ -164,22 +164,22 @@ class PublicApiSpec extends SparkSuite {
     assert(wrote > 0, "no checkpoint files written")
   }
 
-  test("releaseArtifacts frees the dedup caches and the next query rebuilds them") {
+  test("release frees the dedup and similarity artifacts and the next query rebuilds them") {
     val dir = sf("sf0.001")
     def persistentRdds = spark.sparkContext.getPersistentRDDs.size
     val q = graft.SparkEntry.queries("d03_dedup_ngram_jaccard")
     val first = q(spark, dir).collect()
     Dedup.prepareShingles(spark, dir) // ensure both artifacts exist
     val withCaches = persistentRdds
-    Dedup.releaseArtifacts(spark, dir)
+    Artifacts.release(spark, dir)
     assert(persistentRdds < withCaches, "release did not free cached artifacts")
     // rebuild path: same results after release
     val second = q(spark, dir).collect()
     assert(second.toSeq == first.toSeq)
     Similarity.prepareIndex(spark, dir)
     val withIvf = persistentRdds
-    Similarity.releaseIndex(spark, dir)
-    assert(persistentRdds < withIvf, "releaseIndex did not free the IVF assignment table")
+    Artifacts.release(spark, dir)
+    assert(persistentRdds < withIvf, "release did not free the IVF assignment table")
   }
 
   test("asofJoin matches each left row to the nearest right row, both directions") {
